@@ -31,16 +31,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   */
 object PqExpressions {
 
-  /** Shared bounds guard: `getLong` on UnsafeArrayData does NOT bounds
-    * check, so a short residual array must fail loudly here rather than
-    * read garbage (the HOF formulation silently produced nulls — a
-    * shape no engine path can reach, since residuals are zip_with over
-    * fixed-Dims vectors; a reachable short array is a bug upstream). */
-  @inline private def check(r: ArrayData, offset: Int, sd: Int): Unit =
+  /** Shared guard over the subvector `[offset, offset + sd)`. `getLong`
+    * on UnsafeArrayData neither bounds-checks nor sees nulls (a null
+    * element reads as 0), so a short residual array or a null element
+    * in the subvector fails loudly here rather than yielding a wrong
+    * distance. The HOF formulation silently produced nulls for both —
+    * shapes no engine path can reach, since residuals are zip_with
+    * over fixed-Dims vectors of non-null elements; a reachable one is
+    * a bug upstream. A null ARRAY is not an error: it propagates to a
+    * null result before this is called. */
+  @inline private def check(r: ArrayData, offset: Int, sd: Int): Unit = {
     if (r.numElements() < offset + sd)
       throw new IllegalArgumentException(
         s"PQ residual array has ${r.numElements()} elements; " +
           s"subspace needs [$offset, ${offset + sd})")
+    var j = offset
+    while (j < offset + sd) {
+      if (r.isNullAt(j))
+        throw new IllegalArgumentException(
+          s"PQ residual array has a null element at index $j; " +
+            s"subspace [$offset, ${offset + sd}) must be non-null")
+      j += 1
+    }
+  }
 
   /** K exact squared distances from the subvector at `offset` to each
     * codebook row, ascending code order. */
@@ -69,6 +82,10 @@ object PqExpressions {
     * ties go to the smallest code, identical to
     * `array_position(dists, array_min(dists)) - 1`. */
   def argmin(r: ArrayData, cb: Array[Array[Long]], offset: Int): GenericInternalRow = {
+    if (cb.isEmpty)
+      throw new IllegalArgumentException(
+        "PQ argmin needs a non-empty codebook: an empty one has no " +
+          "nearest code")
     check(r, offset, cb(0).length)
     var bestCode = 0
     var bestDist = Long.MaxValue

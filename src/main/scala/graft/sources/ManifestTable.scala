@@ -6,6 +6,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** MANIFEST-POINTER TABLES — the transactional commit the rewriting
@@ -250,17 +251,22 @@ object ManifestTable {
     * min/max bounds can't skip anything for an equality probe on a
     * column the table is NOT clustered by (every file's [lo, hi] spans
     * the domain), which is exactly the case Parquet's bloom pages and
-    * Delta's bloom index files exist for. Filters live in one sidecar
-    * per commit directory per column (`data/c-<uuid>/_bloom.<col>`, a
-    * filename → serialized-filter map), so they ride along with their
-    * data files: [[append]] copies manifest lines verbatim and the
-    * sidecars stay put; [[vacuum]] removes them with their commit dir.
-    * A file without a sidecar entry (pre-v5 commit, or a writer that
-    * couldn't stamp the column) is simply never skipped — the same
-    * "unknown = may contain anything" fallback every other stat uses. */
+    * Delta's bloom index files exist for. The writer tasks build the
+    * filters as they write each file, alongside its row count and
+    * stats ([[FileStatsTracker]]); the commit adds no Spark job. Each
+    * filter is sized by its own file's exact distinct count of the
+    * column. Filters live in one sidecar per commit directory per
+    * column (`data/c-<uuid>/_bloom.<col>`, a filename →
+    * serialized-filter map), so they ride along with their data files:
+    * [[append]] copies manifest lines verbatim and the sidecars stay
+    * put; [[vacuum]] removes them with their commit dir. A file without
+    * a sidecar entry (pre-v5 commit, or a writer that couldn't stamp
+    * the column) is simply never skipped — the same "unknown = may
+    * contain anything" fallback every other stat uses. */
   private val BloomKey = "bloomcols"
-  /** Per-file false-positive rate; a false positive costs one wasted
-    * file read, a false negative cannot happen — skipping is sound. */
+  /** Every file's false-positive rate, met by sizing each filter for
+    * its own file; a false positive costs one wasted file read, a false
+    * negative cannot happen — skipping is sound. */
   private val BloomFpp = 0.01
   /** Format v6: MERGE-ON-READ equality deletes (Iceberg's equality
     * delete files, the write-amplification complement to [[mergeCoW]]'s
@@ -790,12 +796,12 @@ object ManifestTable {
         "prune wrong files")
   }
 
-  /** The aggregation expression that turns a column into its stored
-    * long stats value: integral columns cast (BEFORE aggregating, so
-    * [lo, hi] ordering is numeric), timestamps become epoch MICROS
-    * (matching `TIMESTAMP_MICROS` parquet encoding; consumers compare
-    * via `timestamp_micros`). Anything else is rejected — a
-    * collation-ordered min/max would prune wrong files. */
+  /** The expression that turns a column into its stored long stats
+    * value, and so the type gate every stamped column passes: integral
+    * columns become long (so [lo, hi] ordering is numeric), timestamps
+    * epoch MICROS (matching `TIMESTAMP_MICROS` parquet encoding;
+    * consumers compare via `timestamp_micros`). Anything else is
+    * rejected — a collation-ordered min/max would prune wrong files. */
   private def statExpr(schema: StructType,
                        k: String): org.apache.spark.sql.Column = {
     val dt = schema(k).dataType
@@ -851,196 +857,55 @@ object ManifestTable {
     * carries format-v3 stats (row count + size); `boundsCol` adds the
     * per-file [lo, hi] key bounds, `statsCols` one extra [lo, hi] pair
     * per column (format v4), `bloomCols` one per-file Bloom filter per
-    * column in the commit dir's sidecars (format v5). */
-  /** Per-file ([lo, hi] stat pairs for `statNames`, row count) read
-    * from the parquet footers of just-written files — zero Spark jobs,
-    * zero data IO. Returns None (caller falls back to the aggregate
-    * pass) unless EVERY requested column in EVERY file is a stat shape
-    * the manifest stores exactly: signed INT32/INT64 (Spark
-    * byte/short/int/long) or INT64 TIMESTAMP(MICROS) (the engine's
-    * pinned parquet output type, whose footer min/max ARE `unix_micros`
-    * values). Chunks of an all-null column carry no min/max but a set
-    * null count — they contribute nothing, exactly like the old
-    * `min/max` aggregates; a chunk with statistics MISSING (not
-    * written) forces the fallback rather than guessing. Zero-row files
-    * are omitted from the map — the caller drops them from the
-    * manifest, as before. */
-  private def footerStats(fs: FileSystem, dir: Path, names: Seq[String],
-                          statNames: Seq[String])
-      : Option[Map[String, (Seq[Option[(Long, Long)]], Long)]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    def servable(pt: org.apache.parquet.schema.PrimitiveType): Boolean =
-      pt.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 =>
-          pt.getLogicalTypeAnnotation match {
-            case null => true
-            case a: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-              a.isSigned
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              pt.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-            case _ => false
-          }
-        case _ => false
-      }
-    def longOf(v: Any): Long = v match {
-      case i: java.lang.Integer => i.longValue
-      case l: java.lang.Long => l.longValue
-      case other => throw new IllegalStateException(
-        s"unexpected footer stat type ${other.getClass}")
-    }
-    val out = Map.newBuilder[String, (Seq[Option[(Long, Long)]], Long)]
-    for (name <- names) {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(dir, name), fs.getConf))
-      try {
-        val footer = reader.getFooter
-        import scala.jdk.CollectionConverters._
-        val blocks = footer.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        if (rows > 0) {
-          val fileSchema = footer.getFileMetaData.getSchema
-          val pairs: Seq[Option[(Long, Long)]] = statNames.map { k =>
-            // a column the file doesn't carry at top level must go
-            // through the aggregate pass's loud resolution error, not
-            // silently stamp unprunable (None) bounds
-            if (!fileSchema.containsField(k)) return None
-            var lo = Long.MaxValue; var hi = Long.MinValue; var seen = false
-            for (b <- blocks; cc <- b.getColumns.asScala
-                 if cc.getPath.size == 1 && cc.getPath.toArray.head == k) {
-              if (!servable(cc.getPrimitiveType)) return None
-              val st = cc.getStatistics
-              if (st != null && st.hasNonNullValue) {
-                lo = math.min(lo, longOf(st.genericGetMin))
-                hi = math.max(hi, longOf(st.genericGetMax))
-                seen = true
-              } else if (st == null || !st.isNumNullsSet ||
-                  st.getNumNulls != cc.getValueCount) {
-                // stats absent (vs. a provably all-null chunk) — don't
-                // guess; the aggregate pass recomputes them exactly
-                return None
-              }
-            }
-            if (seen) Some((lo, hi)) else None
-          }
-          out += name -> ((pairs, rows))
-        }
-      } finally reader.close()
-    }
-    Some(out.result())
-  }
-
-  private def stage(spark: SparkSession, root: String,
-                    write: String => Unit,
+    * column in the commit dir's sidecars (format v5). The writer tasks
+    * produce every one of these per-file facts as they write
+    * ([[FileStatsTracker]]), so no Spark job runs after the data
+    * write; each file's filter is sized by that file's own distinct
+    * count. The column types are checked against `df`'s schema before
+    * anything is written: bounds columns must be integral, stats and
+    * bloom columns integral or timestamp ([[statExpr]]). */
+  private def stage(spark: SparkSession, root: String, df: DataFrame,
                     allowEmpty: Boolean = false,
                     boundsCol: Option[String] = None,
                     statsCols: Seq[String] = Seq.empty,
                     bloomCols: Seq[String] = Seq.empty,
                     relPrefix: String = "data"): Seq[String] = {
+    boundsCol.foreach(k => requireIntegral(df.schema, k))
+    val statNames: Seq[String] = boundsCol.toSeq ++ statsCols
+    (statNames ++ bloomCols).foreach(k => statExpr(df.schema, k))
     val rel = s"$relPrefix/c-${UUID.randomUUID().toString.take(12)}"
     val dir = new Path(root, rel)
-    write(dir.toString)
+    val tracker = new FileStatsTracker(df.schema, statNames, bloomCols,
+      BloomFpp)
+    Bridge.writeParquet(df, dir.toString, Seq(tracker))
     val fs = fsOf(spark, dir)
     val staged = fs.listStatus(dir).toSeq
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
       .map(f => f.getPath.getName -> f.getLen).toMap
     require(allowEmpty || staged.nonEmpty, "commit staged zero data files")
     if (staged.isEmpty) return Seq.empty
-    // per-file stats for the manifest (formats v3/v4), taken from the
-    // parquet FOOTERS the write just produced (optimization guide §1/§6
-    // — the footers already hold exact typed min/max and row counts, so
-    // re-scanning the staged files was one full Spark job per commit,
-    // paid by EVERY write in the engine: append, merge, compaction,
-    // every streaming micro-batch apply). Footer min/max for signed
-    // INT32/INT64 and TIMESTAMP(MICROS) — the only stat shapes
-    // [[statExpr]] admits, and the engine pins TIMESTAMP_MICROS output
-    // — are bit-exact equals of the old `min(cast(k as long))`
-    // aggregates, so the manifest lines are byte-identical
-    // (ManifestFooterStatsSpec pins the equality). Any other shape, or
-    // a footer without statistics, falls back to the aggregate pass —
-    // which also owns the loud non-integral type rejection.
-    lazy val justWritten = spark.read.parquet(dir.toString)
-    val statNames: Seq[String] = boundsCol.toSeq ++ statsCols
-    def aggregateStats(): Map[String, (Seq[Option[(Long, Long)]], Long)] = {
-      boundsCol.foreach(k => requireIntegral(justWritten.schema, k))
-      val statCols: Seq[(String, org.apache.spark.sql.Column)] =
-        boundsCol.map(k => k -> col(k).cast("long")).toSeq ++
-          statsCols.map(k => k -> statExpr(justWritten.schema, k))
-      val aggs = statCols.zipWithIndex.flatMap { case ((_, e), i) =>
-        Seq(min(e).as(s"_lo$i"), max(e).as(s"_hi$i"))
-      } :+ count(lit(1)).as("_n")
-      justWritten
-        .groupBy(input_file_name().as("_f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val pairs = statCols.indices.map { i =>
-            if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-            else Some((r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
-          }
-          new Path(r.getString(0)).getName ->
-            ((pairs, r.getLong(1 + 2 * statCols.size)))
-        }.toMap
+    // every staged file must have its writer's facts: one without them
+    // would be dropped below as empty, silently losing its rows
+    staged.keys.foreach(name => if (!tracker.perFile.contains(name))
+      throw new IllegalStateException(s"no writer stats for staged $name"))
+    val perFile = tracker.perFile.filter(_._2.rows > 0)
+    if (perFile.nonEmpty) bloomCols.zipWithIndex.foreach { case (k, i) =>
+      writeBloomSidecar(fs, new Path(dir, s"_bloom.$k"),
+        perFile.toSeq.map { case (name, f) => name -> f.blooms(i) }
+          .sortBy(_._1))
     }
-    val perFile: Map[String, (Seq[Option[(Long, Long)]], Long)] =
-      footerStats(fs, dir, staged.keys.toSeq, statNames)
-        .getOrElse(aggregateStats())
-    // format v5: one Bloom filter per file per declared column. TWO
-    // more passes reading only the bloom columns: a per-file DISTINCT
-    // count (a filter holds a SET — sizing by row count would pay the
-    // ~10 bits/entry tax once per duplicate occurrence; BloomProbe
-    // measured the repeat factor directly on lineitem), then the
-    // filters themselves sized PER COLUMN by that column's largest
-    // per-file distinct count (a global max across columns would
-    // oversize every low-cardinality column's sidecars by the widest
-    // column's factor). The filter aggregation can't fold into the
-    // distinct pass — a Bloom filter's bit array is allocated from
-    // `expected` BEFORE any value is inserted. The per-file filters
-    // come back through the driver, which writes one sidecar per
-    // column into the commit dir — at this design's driver-manifest
-    // scale that's the same shape as the stats collect (a production
-    // format emits per-file sidecars from the writer tasks themselves).
-    if (bloomCols.nonEmpty && perFile.nonEmpty) {
-      val dAggs = bloomCols.zipWithIndex.map { case (k, i) =>
-        countDistinct(statExpr(justWritten.schema, k)).as(s"_d$i") }
-      val dRows = justWritten
-        .groupBy(input_file_name().as("_f"))
-        .agg(dAggs.head, dAggs.tail: _*)
-        .collect()
-      val expectedPerCol = bloomCols.indices.map(i =>
-        math.max(1L, dRows.iterator.map(_.getLong(1 + i)).max))
-      val bAggs = bloomCols.zipWithIndex.map { case (k, i) =>
-        graft.functions.BloomAgg.sketch(
-          statExpr(justWritten.schema, k), expectedPerCol(i), BloomFpp)
-          .as(s"_b$i")
-      }
-      val rows = justWritten
-        .groupBy(input_file_name().as("_f"))
-        .agg(bAggs.head, bAggs.tail: _*)
-        .collect()
-      bloomCols.zipWithIndex.foreach { case (k, i) =>
-        writeBloomSidecar(fs, new Path(dir, s"_bloom.$k"),
-          rows.toSeq.map(r => new Path(r.getString(0)).getName ->
-            r.getAs[Array[Byte]](1 + i)).sortBy(_._1))
-      }
-    }
-    def entryOf(name: String, bytes: Long,
-                pairs: Seq[Option[(Long, Long)]], n: Long): Entry = {
+    def entryOf(name: String, bytes: Long, f: FileFacts): Entry = {
       val (primary, extra) =
-        if (boundsCol.isDefined) (pairs.head, pairs.tail)
-        else (None, pairs)
+        if (boundsCol.isDefined) (f.bounds.head, f.bounds.tail)
+        else (None, f.bounds)
       Entry(s"$rel/$name", primary.map(_._1), primary.map(_._2),
-        Some(n), Some(bytes), extra)
+        Some(f.rows), Some(bytes), extra)
     }
+    // a ZERO-row file (a writer task with an empty partition)
+    // contributes nothing: drop it from the manifest rather than carry
+    // an unprunable line
     val lines = staged.toSeq.sortBy(_._1).flatMap { case (name, bytes) =>
-      perFile.get(name) match {
-        case Some((pairs, n)) => Some(entryOf(name, bytes, pairs, n).line)
-        // ZERO rows (no group at all): a writer task that got an empty
-        // partition — the file contributes nothing, drop it from the
-        // manifest rather than carrying an unprunable line
-        case None => None
-      }
+      perFile.get(name).map(entryOf(name, bytes, _).line)
     }
     // an all-empty write (zero rows total) must NOT silently commit a
     // zero-entry manifest: keep the raw file list (schema preserved,
@@ -1114,15 +979,11 @@ object ManifestTable {
     val fs = fsOf(spark, new Path(root))
     val base = expectedBase.getOrElse(currentVersion(spark, root)
       .getOrElse(0))
-    // fail fast BEFORE the data write: an invalid bounds/stats/bloom
-    // column must not burn a full table write and strand it as orphans
-    boundsCol.foreach(k => requireIntegral(df.schema, k))
-    (statsCols ++ bloomCols).foreach(k => statExpr(df.schema, k))
     // (re)creation stamps fresh field ids 1..n — the stable column
     // identities every later rename/drop resolves against
     val outSchema = stampFieldIds(asNullable(df.schema))
     val dfOut = alignToSchema(df, outSchema)
-    val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
+    val staged = stage(spark, root, dfOut,
       boundsCol = boundsCol, statsCols = statsCols, bloomCols = bloomCols)
     val headers = boundsHeader(boundsCol) ++
       (if (statsCols.nonEmpty) Map(StatsKey -> statsCols.mkString(","))
@@ -1272,7 +1133,7 @@ object ManifestTable {
     var validatedBase = v0
     val dfOut = evolved0.map { case (s, _) => alignToSchema(df, s) }
       .getOrElse(df)
-    val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
+    val staged = stage(spark, root, dfOut,
       boundsCol = effBounds, bloomCols = effBloom)
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -1406,8 +1267,7 @@ object ManifestTable {
       .take(1).isEmpty,
       "null keys cannot be equality-deleted (the anti-join would " +
         "never match them)")
-    val staged = stage(spark, root,
-      dir => delKeys.coalesce(1).write.parquet(dir),
+    val staged = stage(spark, root, delKeys.coalesce(1),
       relPrefix = "deletes")
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -1594,11 +1454,10 @@ object ManifestTable {
       scala.util.Try(statExpr(pinned.schema, k)).isSuccess
     val bloomCs = m.bloomCols.filter(stampable)
     val statsCs = m.statsCols.filter(stampable)
-    val staged = stage(spark, root, dir =>
+    val staged = stage(spark, root,
       pinned
         .repartitionByRange(targetFiles, col(clusterCol))
-        .sortWithinPartitions(clusterCol)
-        .write.parquet(dir), boundsCol = stampCol,
+        .sortWithinPartitions(clusterCol), boundsCol = stampCol,
       statsCols = statsCs, bloomCols = bloomCs)
     val headers = boundsHeader(stampCol) ++
       (if (bloomCs.nonEmpty) Map(BloomKey -> bloomCs.mkString(","))
@@ -1684,11 +1543,10 @@ object ManifestTable {
     def stampable(k: String) = pinned.schema.fieldNames.contains(k) &&
       scala.util.Try(statExpr(pinned.schema, k)).isSuccess
     val bloomCs = m.bloomCols.filter(stampable)
-    val staged = stage(spark, root, dir =>
+    val staged = stage(spark, root,
       pinned
         .repartitionByRange(targetFiles, zv)
-        .sortWithinPartitions(zv)
-        .write.parquet(dir),
+        .sortWithinPartitions(zv),
       statsCols = cols, bloomCols = bloomCs)
     val headers = Map(StatsKey -> cols.mkString(",")) ++
       (if (bloomCs.nonEmpty) Map(BloomKey -> bloomCs.mkString(","))
@@ -2172,7 +2030,7 @@ object ManifestTable {
       df.schema.fieldNames.contains(k) &&
         scala.util.Try(statExpr(df.schema, k)).isSuccess)
     val dfOut = m.schema.map(alignToSchema(df, _)).getOrElse(df)
-    val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
+    val staged = stage(spark, root, dfOut,
       boundsCol = effBounds, bloomCols = effBloom)
     // branch manifests never carry branch pointers (pointers live on
     // the MAIN chain only — a published branch must not smuggle them)
@@ -2697,8 +2555,7 @@ object ManifestTable {
     // upsert frames come from user DataFrames with no id metadata
     val rewrittenOut = tableSchema.map(alignToSchema(rewritten, _))
       .getOrElse(rewritten)
-    val staged = stage(spark, root,
-      dir => rewrittenOut.write.parquet(dir), allowEmpty = true,
+    val staged = stage(spark, root, rewrittenOut, allowEmpty = true,
       boundsCol = stampCol, bloomCols = bloomCs)
     // delete sequencing, write side: changed keys leave the delete set
     // — carry the delete files VERBATIM when the merge touched none of
@@ -2719,8 +2576,7 @@ object ManifestTable {
         if (touched == 0) m.deleteEntries.map(_.line)
         else if (total == touched) Seq.empty
         else stage(spark, root,
-          dir => dk.join(changedKeys, keyCols, "left_anti")
-            .coalesce(1).write.parquet(dir),
+          dk.join(changedKeys, keyCols, "left_anti").coalesce(1),
           relPrefix = "deletes")
     }
     // a merge that would empty the table entirely (full-table delete
@@ -2902,8 +2758,7 @@ object ManifestTable {
     // dropped here too)
     val rewrittenOut = m.schema.map(alignToSchema(rewritten, _))
       .getOrElse(rewritten.drop(fileTag))
-    val staged = stage(spark, root,
-      dir => rewrittenOut.write.parquet(dir), allowEmpty = true,
+    val staged = stage(spark, root, rewrittenOut, allowEmpty = true,
       boundsCol = stampCol, statsCols = m.statsCols.filter(stampable),
       bloomCols = m.bloomCols.filter(stampable))
     require(carryE.nonEmpty || staged.nonEmpty,

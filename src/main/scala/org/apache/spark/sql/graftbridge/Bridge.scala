@@ -35,6 +35,37 @@ object Bridge {
     classic.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
+
+  /** Write `df` as parquet files into `dir` in one Spark job, with the
+    * session's commit protocol, and hand every written row to
+    * `trackers` inside the writing tasks. This is what
+    * `df.write.parquet(dir)` runs, minus the command wrapper that has
+    * no way to take extra trackers; `sessionState` is `private[sql]`,
+    * so the call lives here — the same `FileFormatWriter.write` call
+    * Delta's TransactionalWrite makes. */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, dir: String,
+                   trackers: Seq[org.apache.spark.sql.execution.datasources
+                     .WriteJobStatsTracker]): Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    // the command path's own check: parquet must not get duplicate names
+    org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(
+      df.schema.fieldNames.toSeq, spark.sessionState.conf.caseSensitiveAnalysis)
+    val committer = org.apache.spark.internal.io.FileCommitProtocol
+      .instantiate(spark.sessionState.conf.fileCommitProtocolClass,
+        java.util.UUID.randomUUID().toString, dir)
+    SQLExecution.withNewExecutionId(qe, Some(s"write parquet $dir")) {
+      FileFormatWriter.write(spark, qe.executedPlan,
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat,
+        committer, FileFormatWriter.OutputSpec(dir, Map.empty,
+          qe.analyzed.output),
+        spark.sessionState.newHadoopConf(), Nil, None, trackers, Map.empty)
+    }
+  }
 }
 
 /** Public re-export of the `private[sql]` `V2TableWithV1Fallback` —

@@ -135,6 +135,25 @@ class PqExpressionParitySpec extends SparkSpec {
     }
   }
 
+  test("an empty codebook and null residual elements fail loudly") {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val r = ArrayData.toArrayData(Array(1L, 2L))
+    val e = intercept[IllegalArgumentException] {
+      PqExpressions.argmin(r, Array.empty[Array[Long]], 0)
+    }
+    assert(e.getMessage.contains("non-empty codebook"))
+    val withNull = ArrayData.toArrayData(Array[Any](1L, null))
+    val cb = Array(Array(1L, 2L))
+    Seq[() => Any](() => PqExpressions.argmin(withNull, cb, 0),
+        () => PqExpressions.distances(withNull, cb, 0)).foreach { f =>
+      val n = intercept[IllegalArgumentException](f())
+      assert(n.getMessage.contains("null element at index 1"))
+    }
+    // the null lies outside subspace [0, 1): nothing to reject
+    assert(PqExpressions.argmin(withNull, Array(Array(1L)), 0).getLong(1)
+      === 0L)
+  }
+
   test("the coding projection stays codegen: no CodegenFallback in the plan") {
     val pq = graft.operators.ProductQuantization
     val df = pq.computePqCodesAt(spark, sfDir, pq.M256, pq.K256)

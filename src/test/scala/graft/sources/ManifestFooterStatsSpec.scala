@@ -5,17 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Round-19 optimization pin: commit-time per-file stats now come from
-  * the parquet FOOTERS of the just-written files (zero Spark jobs)
-  * instead of a re-read aggregate pass. The footer values must be
-  * BIT-IDENTICAL to the old `min(cast(k as long)) / max(...) /
-  * count(*)` aggregates for every admitted stat shape — this spec
-  * recomputes the aggregates per staged file and compares them to the
-  * committed manifest lines, across: negative longs, ints, all-null
-  * and partly-null columns, and TIMESTAMP(MICROS) (whose footer
-  * min/max must equal `unix_micros` aggregates). The loud rejection
-  * of non-integral stat columns must also survive (it lives in the
-  * fallback aggregate path). */
+/** Pin for the commit-time per-file stats, which the writer tasks
+  * compute as they write each file (`FileStatsTracker`, no Spark job
+  * after the data write). The stamped values must be BIT-IDENTICAL to
+  * `min(cast(k as long)) / max(...) / count(*)` aggregates for every
+  * admitted stat shape — this spec recomputes the aggregates per
+  * staged file and compares them to the committed manifest lines,
+  * across: negative longs, ints, all-null and partly-null columns,
+  * and TIMESTAMP(MICROS) (whose stamped bounds must equal
+  * `unix_micros` aggregates). The loud rejection of non-integral stat
+  * columns must also survive (a type check on the input schema before
+  * anything is written). */
 class ManifestFooterStatsSpec extends SparkSpec {
 
   private def freshRoot(): String =

@@ -837,6 +837,74 @@ class ManifestTableSpec extends SparkSpec {
     check(delta.orderBy("doc_id").limit(1).collect()(0), mustPrune = false)
   }
 
+  test("an append to a bounds + bloom table is ONE Spark job (the " +
+      "writer tasks stamp stats and filters); every stamped filter " +
+      "holds each value of its own file and is sized by its own " +
+      "distinct count") {
+    val root = freshRoot()
+    // narrow inputs (no exchange), so the data write is the only job a
+    // commit needs: bounds k, an integral bloom column b (scattered,
+    // so bounds cannot prune it) and a timestamp bloom column t
+    def rows(from: Long, until: Long) = spark.range(from, until, 1, 4)
+      .select(col("id").as("k"),
+        pmod(col("id") * 2654435761L, lit(1000003L)).as("b"),
+        timestamp_micros(lit(1700000000000000L) +
+          pmod(col("id"), lit(997L)) * 1000003L).as("t"))
+    ManifestTable.overwrite(spark, root, rows(0, 4000),
+      boundsCol = Some("k"), bloomCols = Seq("b", "t"))
+    val batch = rows(4000, 8000)
+    val sc = spark.sparkContext
+    val group = s"append-job-count-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one append")
+    try {
+      ManifestTable.append(spark, root, batch)
+      org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get === 1, s"one append ran ${jobs.get} Spark jobs")
+    // every file of both commits: its filters answer true for every
+    // value it holds, and each is sized by the file's own distinct count
+    val fs = new Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def sidecar(dir: Path, c: String)
+        : Map[String, org.apache.spark.util.sketch.BloomFilter] = {
+      val in = new java.io.DataInputStream(fs.open(new Path(dir, s"_bloom.$c")))
+      try (0 until in.readInt()).map { _ =>
+        val name = in.readUTF()
+        val bytes = new Array[Byte](in.readInt())
+        in.readFully(bytes)
+        name -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(bytes))
+      }.toMap finally in.close()
+    }
+    val files = ManifestTable.snapshot(spark, root).files.map(new Path(_))
+    assert(files.map(_.getParent).distinct.size === 2)
+    assert(files.size >= 8)
+    files.foreach { f =>
+      val vals = spark.read.parquet(f.toString)
+        .select(col("b"), unix_micros(col("t"))).collect()
+      Seq("b" -> 0, "t" -> 1).foreach { case (c, i) =>
+        val bf = sidecar(f.getParent, c)(f.getName)
+        val own = vals.map(_.getLong(i)).distinct
+        assert(own.forall(bf.mightContainLong), s"$c filter of $f")
+        assert(bf.bitSize() === org.apache.spark.util.sketch.BloomFilter
+          .create(own.length.toLong, 0.01).bitSize(), s"$c sizing of $f")
+      }
+    }
+  }
+
   test("equality delete (format v6): O(delta) commit carries every " +
       "data file verbatim; reads (incl. pruned) suppress the keys; " +
       "time travel sees pre-delete; compaction applies + drops; " +

@@ -36,9 +36,9 @@ object Bridge {
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 
-  /** Write `df` as parquet files into `dir` in one Spark job, with the
-    * session's commit protocol, and hand every written row to
-    * `trackers` inside the writing tasks. This is what
+  /** Write `df` as parquet files into `dir` with the session's commit
+    * protocol, and hand every written row to `trackers` inside the
+    * writing tasks. This is what
     * `df.write.parquet(dir)` runs, minus the command wrapper that has
     * no way to take extra trackers; `sessionState` is `private[sql]`,
     * so the call lives here — the same `FileFormatWriter.write` call
